@@ -129,39 +129,10 @@ object Bench {
       ExtractionPipeline.extract(docs, media, cpus * 4)).count()
     val invoiceSec = if (skipInvoice) 0.0 else (System.nanoTime() - t1) / 1e9
 
-    // --- the no-broadcast co-bucketed path ----------------------------
-    // Stages the corpus bucketed by media_ref (one-time layout job,
-    // the Iceberg-ingest stand-in — excluded from timing) and times
-    // extractStaged: the single-job join path with zero broadcast and
-    // zero exchange on the media join. Default ON for full
-    // driver-shape runs (buckets = 4×cpus); off in the scaling-harness
-    // shapes (SKIP_QUERIES / CHUNK runs measure only the north-star
-    // extract). SPARK_GRAFT_BUCKETS=n overrides, 0 disables.
-    val skipQueriesEnv = sys.env.get("SPARK_GRAFT_SKIP_QUERIES").contains("1")
-    val stagedSecs = sys.env.get("SPARK_GRAFT_BUCKETS").map(_.toInt)
-      .orElse(
-        if (skipQueriesEnv || sys.env.get("SPARK_GRAFT_CHUNK").exists(_.nonEmpty)) None
-        else Some(cpus * 4))
-      .filter(_ > 0).map { b =>
-      val stage = graft.pipeline.Commit.stageBucketed(
-        spark, docs, media, s"$benchDir/bucketed_bench", b)
-      ExtractionPipeline.extractStaged(spark, stage, cpus * 4).count() // warm
-      (1 to measureRuns).map { _ =>
-        val t0 = System.nanoTime()
-        ExtractionPipeline.extractStaged(spark, stage, cpus * 4)
-          .agg(count(lit(1)), sum(size(col("spans")))).head()
-        (System.nanoTime() - t0) / 1e9
-      }
-    }
-    val stagedJson = stagedSecs.map { ss =>
-      val med = ss.sorted.apply(ss.length / 2)
-      f""","staged_extract_sec_median":$med%.3f,"staged_extract_secs":${ss.map(s => f"$s%.3f").mkString("[", ",", "]")}"""
-    }.getOrElse("")
-
     // --- operator queries over the sf tables --------------------------
     // SPARK_GRAFT_SKIP_QUERIES=1 -> pipeline-only timing (tight scaling
     // trials on a noisy-neighbour box need short runs)
-    val skipQueries = skipQueriesEnv
+    val skipQueries = sys.env.get("SPARK_GRAFT_SKIP_QUERIES").contains("1")
     // a failed query reports null, NOT its time-to-crash (a crash
     // timed as a fast run would silently flatter the table) and NOT a
     // sentinel like -1.0 (downstream aggregation — the pooled
@@ -309,7 +280,7 @@ object Bench {
     // JVM's best-of-different-windows overstates concurrent throughput
     val secsArr = runSecs.map(s => f"$s%.3f").mkString("[", ",", "]")
     val json =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs$warmJson$ivfJson,"sf":"$sfDir","docs_per_sec":$docsPerSec%.1f,"docs_per_sec_best":$docsPerSecBest%.1f,"spans_per_sec":$spansPerSec%.1f,"extract_sec":$extractSec%.3f,"extract_sec_median":$extractSecMedian%.3f,"extract_secs":$secsArr,"measure_runs":$measureRuns,"invoice_sec":$invoiceSec%.3f$stagedJson,"bench_docs":$docCount,"invoices":$invoiceCount,"cpus":$cpus}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs$warmJson$ivfJson,"sf":"$sfDir","docs_per_sec":$docsPerSec%.1f,"docs_per_sec_best":$docsPerSecBest%.1f,"spans_per_sec":$spansPerSec%.1f,"extract_sec":$extractSec%.3f,"extract_sec_median":$extractSecMedian%.3f,"extract_secs":$secsArr,"measure_runs":$measureRuns,"invoice_sec":$invoiceSec%.3f,"bench_docs":$docCount,"invoices":$invoiceCount,"cpus":$cpus}"""
     println(json)
     // belt-and-braces for log-prefix scrapers: the same line lands in a file
     sys.env.get("SPARK_GRAFT_BENCH_OUT").foreach(p =>

@@ -728,10 +728,20 @@ object SimilarityOps {
     * check fenced index content but not sample identity). The collect
     * is bounded by the sample size — the caller's own tuning sample,
     * small by design (it already paid a count() here before).
+    *
+    * Each id is hashed length-prefixed, so no separator inside an id
+    * can make two different id lists hash alike (`["1,2"]` vs
+    * `["1","2"]`). A NULL id has no identity to hash and is rejected.
     */
   def ivfSampleTag(ids: Seq[String]): String = {
+    require(!ids.contains(null),
+      "ivfSampleTag: the tuning sample has a NULL query id; give every sample row an id")
     val md = java.security.MessageDigest.getInstance("MD5")
-    md.update(ids.sorted.mkString(",").getBytes("UTF-8"))
+    ids.sorted.foreach { id =>
+      val b = id.getBytes("UTF-8")
+      md.update(java.nio.ByteBuffer.allocate(4).putInt(b.length).array())
+      md.update(b)
+    }
     md.digest().map("%02x".format(_)).mkString
   }
 

@@ -332,262 +332,16 @@ object Commit {
       .map(_.group(1).toDouble)
   }
 
-  /** Handle to a bucketed staging layout (see [[stageBucketed]]). */
-  final case class BucketedStage(
-      tasksTable: String,
-      mediaTable: String,
-      inlineDir: String,
-      buckets: Int)
-
-  /** Order-independent content fingerprint of a media ref SET (bytes
-    * immutable by ref — the object-store contract): xor of key hashes
-    * + count. Shared by [[stageBucketed]] and [[stageMediaBucketed]]
-    * so the two sentinel formats cannot drift apart.
-    */
-  private def mediaRefFingerprint(mediaClean: DataFrame): String = {
-    val r = mediaClean.select(xxhash64(col("media_ref")).as("h"))
-      .agg(expr("bit_xor(h)").as("hx"),
-        expr("bit_xor(DISTINCT h)").as("hxd"),
-        count(lit(1)).as("n")).head()
-    def nz(i: Int) = if (r.isNullAt(i)) 0L else r.getLong(i)
-    // two xor folds + count (see stageByChunkSlow): the distinct fold
-    // breaks the even-multiplicity cancellation of the plain fold
-    s"xor:${nz(0)}:${nz(1)}:n:${r.getLong(2)} layout=rowgroup4m"
-  }
-
-  /** Write a (media_ref, bytes) frame as a bucketed+sorted parquet
-    * table, one file per bucket, 4 MB row groups (scan-split =
-    * kernel-scheduling unit).
-    */
-  private def writeBucketedMedia(
-      spark: SparkSession, mediaClean: DataFrame,
-      path: String, tbl: String, buckets: Int): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    mediaClean
-      .repartition(buckets, col("media_ref"))
-      .write.format("parquet")
-      .bucketBy(buckets, "media_ref").sortBy("media_ref")
-      .option("path", path)
-      .option("parquet.block.size", s"${4 << 20}")
-      .mode("overwrite").saveAsTable(tbl)
-  }
-
-  /** Recreate a catalog entry over EXISTING bucketed files — the
-    * catalog is session state; a fresh session must re-register, never
-    * rewrite, an intact (possibly 100-TB) staged table.
-    */
-  private def registerBucketedTable(
-      spark: SparkSession, tbl: String, schemaDdl: String,
-      path: String, buckets: Int): Unit =
-    spark.sql(
-      s"""CREATE TABLE $tbl ($schemaDdl) USING PARQUET
-         |CLUSTERED BY (media_ref) SORTED BY (media_ref)
-         |INTO $buckets BUCKETS
-         |LOCATION '$path'""".stripMargin)
-
-  /** Sentinel-guarded component freshness: fresh sentinel + live table
-    * → no-op; fresh sentinel + lost table → `reRegister` over the
-    * existing files; anything else → invalidate (crash mid-rewrite ⇒
-    * still dirty), `rewrite`, re-arm the sentinel atomically.
-    *
-    * reRegister is gated on the data location still holding at least
-    * one data file (advisor, round 5): a sentinel that survived while
-    * the data subdir was removed must NOT register an empty table —
-    * CREATE TABLE ... LOCATION over nothing would silently proceed
-    * with every payload missing; such a component falls through to the
-    * invalidate-and-rewrite branch instead.
-    */
-  private def freshComponent(
-      root: Path, name: String, fingerprint: String, tableOk: Boolean,
-      reRegister: Option[() => Unit] = None,
-      dataDir: Option[Path] = None)(rewrite: () => Unit): Unit = {
-    val sentinel = root.resolve(s"_${name}_complete")
-    val sentinelFresh = Files.exists(sentinel) &&
-      Files.readString(sentinel) == fingerprint
-    def hasDataFiles = dataDir.forall(d => listDir(d).exists { p =>
-      val n = p.getFileName.toString
-      !n.startsWith("_") && !n.startsWith(".")
-    })
-    if (sentinelFresh && tableOk) ()
-    else if (sentinelFresh && reRegister.isDefined && hasDataFiles)
-      reRegister.get.apply()
-    else {
-      Files.deleteIfExists(sentinel)
-      rewrite()
-      val tmp = root.resolve(s"._${name}_complete.tmp")
-      Files.writeString(tmp, fingerprint)
-      Files.move(tmp, sentinel,
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    }
-  }
-
-  /** Stage the input CO-BUCKETED BY `media_ref` — the storage layout
-    * under which the media join needs neither a broadcast nor any
-    * exchange (ExtractionPipeline.extractStaged). Three outputs:
-    *
-    *  - media-span task metadata (doc_id, offset, kind, media_ref —
-    *    bytes-free), bucketed+sorted by media_ref;
-    *  - payloads, bucketed+sorted by media_ref, 4 MB row groups;
-    *  - inline tasks (text/html/empty-doc/ref-less), plain parquet —
-    *    they never touch the join.
-    *
-    * Both bucketed writes repartition by the bucket key first so each
-    * bucket lands in ONE file (write-side HashPartitioning matches the
-    * bucket spec), letting the scan-side sort elide. Bucket metadata
-    * lives in the session catalog (saveAsTable): this is the sandbox
-    * stand-in for an Iceberg table whose partition spec carries
-    * `bucket(N, media_ref)` durably — reuse across sessions restages
-    * if the catalog entry is gone.
-    *
-    * Invalidation is PER COMPONENT (round 5; was one whole-input
-    * sentinel): tasks, media, and inline each carry their own atomic
-    * content-fingerprint sentinel (order-independent xor of row hashes
-    * + count — [[stageByChunk]]'s scheme), so a change touching only
-    * doc text rewrites the two small metadata components and REUSES
-    * the bucketed payload table — the dominant bytes at 100 TB.
-    * Payload immutability by ref is assumed, as in [[stageByChunk]].
-    * Finer grain (appending a few refs into existing buckets) is
-    * Iceberg's bucket-partitioned append; Spark's bucketed writer only
-    * replaces tables wholesale, so the media fingerprint decides reuse
-    * per TABLE, not per bucket.
-    */
-  def stageBucketed(
-      spark: SparkSession,
-      docs: DataFrame,
-      media: DataFrame,
-      outDir: String,
-      buckets: Int): BucketedStage = {
-    require(buckets > 0)
-    val root = Paths.get(outDir, "_bucketed", s"buckets=$buckets")
-    Files.createDirectories(root)
-    // pre-round-5 whole-input sentinel → no component fingerprints:
-    // drop it, every component re-fingerprints (and rewrites on miss)
-    Files.deleteIfExists(root.resolve("_bucketed_complete"))
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$outDir|$buckets".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(8)
-    val tasksTbl = s"graft_bucketed_tasks_$tag"
-    val mediaTbl = s"graft_bucketed_media_$tag"
-    // unchanged-input fast path (see stageByChunk): identical input
-    // file set + live catalog tables ⇒ the component fingerprints
-    // cannot have changed; skip the three fingerprint scans
-    val inputSnap = snapshotId(docs) + "|" + snapshotId(media)
-    val snapFile = root.resolve("_input_snapshot")
-    // file-backed inputs only: in-memory frames degenerate to a
-    // schema-hash snapshot (see stageByChunk)
-    if (docs.inputFiles.nonEmpty && media.inputFiles.nonEmpty &&
-        Files.exists(snapFile) && Files.readString(snapFile) == inputSnap &&
-        spark.catalog.tableExists(tasksTbl) &&
-        spark.catalog.tableExists(mediaTbl))
-      return BucketedStage(tasksTbl, mediaTbl, s"$root/inline", buckets)
-    Files.deleteIfExists(snapFile) // stale until every component is fresh
-    val tasks = ExtractionPipeline.spanTasks(docs)
-    val isMedia = ExtractionPipeline.isMediaSpan
-    def fp(df: DataFrame): String = {
-      val cols = struct(df.columns.toIndexedSeq.map(col): _*)
-      val r = df.select(xxhash64(to_json(cols)).as("h"))
-        .agg(expr("bit_xor(h)").as("hx"),
-          expr("bit_xor(DISTINCT h)").as("hxd"),
-          count(lit(1)).as("n")).head()
-      def nz(i: Int) = if (r.isNullAt(i)) 0L else r.getLong(i)
-      // two xor folds + count (see stageByChunkSlow): the distinct fold
-      // breaks the even-multiplicity cancellation of the plain fold
-      s"xor:${nz(0)}:${nz(1)}:n:${r.getLong(2)} layout=rowgroup4m"
-    }
-    val mediaClean = media.filter(col("media_ref") =!= lit(""))
-      .select(col("media_ref"), col("bytes"))
-    val mediaTasks = tasks.filter(isMedia)
-      .select(col("doc_id"), col("offset"), col("kind"), col("media_ref"))
-    val inlineTasks = tasks.filter(!isMedia)
-    freshComponent(root, "tasks", fp(mediaTasks),
-      spark.catalog.tableExists(tasksTbl),
-      reRegister = Some(() => registerBucketedTable(spark, tasksTbl,
-        "doc_id STRING, offset INT, kind STRING, media_ref STRING",
-        s"$root/tasks", buckets)),
-      dataDir = Some(root.resolve("tasks"))) { () =>
-      spark.sql(s"DROP TABLE IF EXISTS $tasksTbl")
-      mediaTasks
-        .repartition(buckets, col("media_ref"))
-        .write.format("parquet")
-        .bucketBy(buckets, "media_ref").sortBy("media_ref")
-        .option("path", s"$root/tasks")
-        .mode("overwrite").saveAsTable(tasksTbl)
-    }
-    freshComponent(root, "media", mediaRefFingerprint(mediaClean),
-      spark.catalog.tableExists(mediaTbl),
-      reRegister = Some(() => registerBucketedTable(spark, mediaTbl,
-        "media_ref STRING, bytes BINARY", s"$root/media", buckets)),
-      dataDir = Some(root.resolve("media"))) { () =>
-      writeBucketedMedia(spark, mediaClean, s"$root/media", mediaTbl, buckets)
-    }
-    freshComponent(root, "inline", fp(inlineTasks), tableOk = true) { () =>
-      inlineTasks.write.mode("overwrite").parquet(s"$root/inline")
-    }
-    // every component fresh under THIS input — arm the fast path
-    val snapTmp = root.resolve("._input_snapshot.tmp")
-    Files.writeString(snapTmp, inputSnap)
-    Files.move(snapTmp, snapFile,
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    BucketedStage(tasksTbl, mediaTbl, s"$root/inline", buckets)
-  }
-
-  /** Stage ONLY the media sidecar bucketed by `media_ref` — the
-    * static side of the streaming no-broadcast join
-    * (ExtractionPipeline.extractVsBucketedMedia): payloads land
-    * bucketed+sorted once, every micro-batch joins against them
-    * exchange-free on the payload side. Guarded by the same atomic
-    * content-fingerprint sentinel as [[stageBucketed]]'s media
-    * component (ref-set xor + count; payload immutability by ref).
-    * Returns the catalog table name.
-    */
-  def stageMediaBucketed(
-      spark: SparkSession,
-      media: DataFrame,
-      outDir: String,
-      buckets: Int): String = {
-    require(buckets > 0)
-    val root = Paths.get(outDir, "_bucketed_media", s"buckets=$buckets")
-    Files.createDirectories(root)
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$outDir|media|$buckets".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(8)
-    val tbl = s"graft_bucketed_smedia_$tag"
-    // unchanged-input fast path, file-backed inputs only (see
-    // stageByChunk)
-    val inputSnap = snapshotId(media)
-    val snapFile = root.resolve("_input_snapshot")
-    if (media.inputFiles.nonEmpty &&
-        Files.exists(snapFile) && Files.readString(snapFile) == inputSnap &&
-        spark.catalog.tableExists(tbl))
-      return tbl
-    Files.deleteIfExists(snapFile)
-    val mediaClean = media.filter(col("media_ref") =!= lit(""))
-      .select(col("media_ref"), col("bytes"))
-    freshComponent(root, "media", mediaRefFingerprint(mediaClean),
-      spark.catalog.tableExists(tbl),
-      reRegister = Some(() => registerBucketedTable(spark, tbl,
-        "media_ref STRING, bytes BINARY", s"$root/media", buckets)),
-      dataDir = Some(root.resolve("media"))) { () =>
-      writeBucketedMedia(spark, mediaClean, s"$root/media", tbl, buckets)
-    }
-    val snapTmp = root.resolve("._input_snapshot.tmp")
-    Files.writeString(snapTmp, inputSnap)
-    Files.move(snapTmp, snapFile,
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    tbl
-  }
-
   /** Run the extraction chunk-by-chunk with idempotent commits.
+    *
+    * The media join is `ExtractionPipeline.extract`'s size-gated
+    * broadcast of the bytes-free task metadata. `chunks` bounds what
+    * that broadcast holds: each chunk reads only its partition-pruned
+    * slice of the staged input, so raising `chunks` shrinks the
+    * metadata side of every join until it fits under the cap.
     *
     * @param failAfterChunks test hook — throw after committing this many
     *        chunks (simulates a killed run for the resume test)
-    * @param bucketedJoin route each chunk through the NO-BROADCAST
-    *        co-bucketed join (stageBucketed + extractStaged) instead of
-    *        the gated-broadcast `extract` — the 10^12-doc path, behind
-    *        a flag so the default chunk loop keeps its single staging
-    *        pass. Each chunk's pruned slice is bucket-staged under its
-    *        own sentinel-guarded dir, so resume pays no re-staging for
-    *        unchanged chunks.
     */
   def run(
       spark: SparkSession,
@@ -598,8 +352,7 @@ object Commit {
       chunks: Int = 4,
       partitions: Int = 32,
       failAfterChunks: Int = Int.MaxValue,
-      expected: Option[DataFrame] = None,
-      bucketedJoin: Boolean = false): RunSummary = {
+      expected: Option[DataFrame] = None): RunSummary = {
     require(chunks > 0)
     Files.createDirectories(manifestDir(outDir))
     val sourceSnapshot = snapshotId(docs)
@@ -619,21 +372,7 @@ object Commit {
         // docs AND media (PlanSpec asserts the PartitionFilters)
         val chunkDocs = stagedDocs.filter(col("chunk") === lit(k)).drop("chunk")
         val chunkMedia = stagedMedia.filter(col("chunk") === lit(k)).drop("chunk")
-        // chunk-scoped co-bucketed layout (own dir → own catalog
-        // tables + sentinels): the media join is exchange-free and
-        // broadcast-free at any chunk size. Reclaimed after the
-        // chunk's commit (below) — a committed chunk never re-runs,
-        // so its staging is dead weight; footprint stays one chunk.
-        val stageOpt =
-          if (bucketedJoin) Some(stageBucketed(spark, chunkDocs, chunkMedia,
-            s"$outDir/_chunk_stage/chunk=$k", partitions))
-          else None
-        val out = stageOpt match {
-          case Some(stage) =>
-            ExtractionPipeline.extractStaged(spark, stage, partitions)
-          case None =>
-            ExtractionPipeline.extract(chunkDocs, chunkMedia, partitions)
-        }
+        val out = ExtractionPipeline.extract(chunkDocs, chunkMedia, partitions)
         out.write.mode("overwrite").parquet(s"$outDir/data/chunk=$k")
         // counts from the written files (what actually committed)
         val written = spark.read.parquet(s"$outDir/data/chunk=$k")
@@ -655,16 +394,6 @@ object Commit {
           stats.getLong(0), stats.getLong(1), stats.getLong(2),
           (System.nanoTime() - t0) / 1000000L, mismatches)
         writeManifest(outDir, m)
-        // the chunk is committed — reclaim its bucketed staging
-        // (catalog tables + dir); resume skips committed chunks, so
-        // nothing will ever read it again (reviewer finding: the
-        // per-chunk stages otherwise accumulate unboundedly)
-        stageOpt.foreach { stage =>
-          spark.sql(s"DROP TABLE IF EXISTS ${stage.tasksTable}")
-          spark.sql(s"DROP TABLE IF EXISTS ${stage.mediaTable}")
-          val d = Paths.get(s"$outDir/_chunk_stage/chunk=$k")
-          if (Files.isDirectory(d)) walkDeepestFirst(d).foreach(Files.delete)
-        }
         committed += m
         done += 1
         writeProgress(outDir, runId, already.size + done, chunks)

@@ -32,6 +32,12 @@ import graft.model.{SpanTask, SubSpan}
   *    default 4 MB here vs 128 MB stock) makes splits 4-8× finer than
   *    cores, so greedy task scheduling evens out variable per-blob OCR
   *    cost the way the salt used to — without moving the bytes.
+  *  - This is the ONLY media join. The broadcast side is size-gated
+  *    (see [[extractSubs]]); what keeps it under the cap is the caller's
+  *    input bound — `Commit.run`'s `chunks` (partition-pruned per-chunk
+  *    slices) in batch, `maxFilesPerTrigger` in streaming. A co-bucketed
+  *    no-broadcast join loses to it once its staging is counted
+  *    (decision table in BENCH/BASELINE.md).
   *  - Inline spans (media_ref = "") never enter the media join: joining
   *    them would funnel every text span onto the "" key — a
   *    catastrophic skew at 10^12 docs. They take the salted
@@ -151,25 +157,18 @@ object ExtractionPipeline {
     // file-size-based estimate of the metadata side: under the cap
     // (default 1 GiB, SPARK_GRAFT_TASK_BROADCAST_CAP) the hint is
     // applied; over it the job DEGRADES to a shuffle join (bytes cross
-    // one exchange — slow, alive) with a logged pointer to the
-    // no-broadcast paths: the storage-co-partitioned layout
-    // (Commit.stageByChunk per-chunk pruning) or the single-job
-    // bucketed join (Commit.stageBucketed + extractStaged), where this
-    // join is a co-located zip — never a payload shuffle.
-    // SPARK_GRAFT_TASK_BROADCAST=on|off overrides the estimate.
-    val useHint = sys.env.getOrElse("SPARK_GRAFT_TASK_BROADCAST", "auto") match {
-      case "on" => true
-      case "off" => false
-      case _ =>
-        val cap = sys.env.get("SPARK_GRAFT_TASK_BROADCAST_CAP")
-          .map(_.toLong).getOrElse(1L << 30)
-        mediaTasks.queryExecution.optimizedPlan.stats.sizeInBytes <= cap
-    }
+    // one exchange — slow, alive) with a logged pointer to the bound
+    // that keeps it under: Commit.run's `chunks`, whose partition-pruned
+    // per-chunk slices (Commit.stageByChunk) shrink the metadata side
+    // of each join, or `maxFilesPerTrigger` in StreamingExtract.run.
+    val cap = sys.env.get("SPARK_GRAFT_TASK_BROADCAST_CAP")
+      .map(_.toLong).getOrElse(1L << 30)
+    val useHint = mediaTasks.queryExecution.optimizedPlan.stats.sizeInBytes <= cap
     if (!useHint)
       log.warn("task-metadata side over the broadcast cap: media join " +
         "degrades to a shuffle join (payload bytes cross one exchange). " +
-        "For large inputs use Commit.stageBucketed + extractStaged " +
-        "(co-partitioned join, no broadcast, no payload shuffle).")
+        "Raise Commit.run(chunks = ...) (or lower maxFilesPerTrigger when " +
+        "streaming) so each join's metadata side fits under the cap.")
     val taskSide = if (useHint) broadcast(mediaTasks) else mediaTasks
     val withMedia = taskSide
       .join(mediaClean, Seq("media_ref"), "inner")
@@ -198,117 +197,6 @@ object ExtractionPipeline {
       .mapPartitions(_.flatMap(t => SpanKernel.process(t, asOf)))
 
     mediaSubs.toDF().unionByName(inlineSubs.toDF())
-  }
-
-  /** The 10^12-doc media join: both sides of `Commit.stageBucketed`'s
-    * layout are bucketed by `media_ref` with the same bucket count, so
-    * the task-metadata ⋈ payload join is a CO-LOCATED ZIP — no
-    * broadcast (nothing to outgrow, no driver OOM), no Exchange on
-    * either side (PlanSpec-asserted), payload bytes never leave their
-    * bucket's scan partitions. This is the single-job answer to the
-    * regime where `extract`'s gated broadcast no longer fits: the
-    * Iceberg deployment writes media bucket-partitioned by media_ref
-    * once at ingest and every extraction run joins exchange-free.
-    *
-    * LEFT join: a media-kind task whose payload row is absent reads
-    * NULL bytes and the kernel emits the missing-payload error span —
-    * identical semantics to `extract`'s anti-join branch, with zero
-    * extra scan. Inline spans were routed to a plain staged table at
-    * staging time and take the same salted repartition as `extract`.
-    *
-    * Parallelism note: a bucketed scan reads one PARTITION PER BUCKET
-    * (maxPartitionBytes does not apply), so media-kernel parallelism
-    * equals the bucket count — choose `buckets` ≳ 4× total cores at
-    * deployment so greedy scheduling still absorbs variable per-blob
-    * cost, exactly the role the 4 MB scan splits play in `extract`.
-    */
-  def extractStaged(
-      spark: SparkSession,
-      stage: Commit.BucketedStage,
-      partitions: Int = 32,
-      asOf: LocalDate = DateExtract.DefaultAsOf): DataFrame = {
-    import spark.implicits._
-    val mediaTasks = spark.table(stage.tasksTable)
-    val payloads = spark.table(stage.mediaTable)
-      .select(col("media_ref"), col("bytes"))
-    // SHUFFLE_HASH hint on the metadata side: without it the fixture-
-    // scale size estimate picks a broadcast join, silently
-    // reintroducing the dependence this path exists to remove; with a
-    // MERGE hint the payload side gets a per-bucket Sort that
-    // materializes bytes in the sorter. ShuffledHashJoin BuildLeft
-    // (LeftOuter) over the co-bucketed scans is the ideal: hash map of
-    // the per-bucket task METADATA, payload rows streamed through the
-    // probe — no exchange, no broadcast, no payload sort, at EVERY
-    // scale (bucketed scan output partitioning already satisfies the
-    // join distribution).
-    val withMedia = mediaTasks.hint("shuffle_hash")
-      .join(payloads, Seq("media_ref"), "left")
-      .withColumn("text", lit(""))
-    val mediaSubs = withMedia.select(taskCols.map(col): _*).as[SpanTask]
-      .mapPartitions(_.flatMap(t => SpanKernel.process(t, asOf)))
-
-    // explicit schema: a corpus with no inline spans reads back as an
-    // empty frame instead of failing schema inference
-    val inlineSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("offset",
-        org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("kind",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("media_ref",
-        org.apache.spark.sql.types.StringType)))
-    val salted = spark.read.schema(inlineSchema).parquet(stage.inlineDir)
-      .repartition(partitions,
-        pmod(xxhash64(col("doc_id"), col("offset")), lit(partitions)))
-      .withColumn("bytes", lit(null).cast(BinaryType))
-    val inlineSubs = salted.select(taskCols.map(col): _*).as[SpanTask]
-      .mapPartitions(_.flatMap(t => SpanKernel.process(t, asOf)))
-
-    reassemble(mediaSubs.toDF().unionByName(inlineSubs.toDF()))
-  }
-
-  /** The media join for a BATCH of docs against an ALREADY-BUCKETED
-    * static media table (Commit.stageMediaBucketed) — the streaming
-    * path's no-broadcast join (round 5): each micro-batch's task
-    * metadata (tiny, bytes-free) is repartitioned to the media table's
-    * exact bucket layout (HashPartitioning(media_ref, buckets) — the
-    * same distribution the bucketed scan reports), so the join needs
-    * NO broadcast and NO exchange on the payload side; only the
-    * metadata rows move, once. ShuffledHashJoin BuildLeft via the
-    * shuffle_hash hint, LEFT join for missing-payload error semantics —
-    * exactly [[extractStaged]]'s join with the task side arriving from
-    * the stream instead of a staged table. Inline spans take the usual
-    * salted repartition.
-    */
-  def extractVsBucketedMedia(
-      spark: SparkSession,
-      docs: DataFrame,
-      mediaTable: String,
-      buckets: Int,
-      partitions: Int = 32,
-      asOf: LocalDate = DateExtract.DefaultAsOf): DataFrame = {
-    import spark.implicits._
-    val tasks = spanTasks(docs)
-    val payloads = spark.table(mediaTable)
-      .select(col("media_ref"), col("bytes"))
-    val mediaTasks = tasks.filter(isMediaSpan)
-      .select(col("doc_id"), col("offset"), col("kind"), col("media_ref"))
-      .repartition(buckets, col("media_ref"))
-    val withMedia = mediaTasks.hint("shuffle_hash")
-      .join(payloads, Seq("media_ref"), "left")
-      .withColumn("text", lit(""))
-    val mediaSubs = withMedia.select(taskCols.map(col): _*).as[SpanTask]
-      .mapPartitions(_.flatMap(t => SpanKernel.process(t, asOf)))
-    val salted = tasks.filter(!isMediaSpan)
-      .repartition(partitions,
-        pmod(xxhash64(col("doc_id"), col("offset")), lit(partitions)))
-      .withColumn("bytes", lit(null).cast(BinaryType))
-    val inlineSubs = salted.select(taskCols.map(col): _*).as[SpanTask]
-      .mapPartitions(_.flatMap(t => SpanKernel.process(t, asOf)))
-    reassemble(mediaSubs.toDF().unionByName(inlineSubs.toDF()))
   }
 
   /** Rebuild `(doc_id, spans)` rows from kernel sub-spans: sort by

@@ -39,15 +39,11 @@ object StreamingExtract {
     * everything currently available, then stop — the testable batch
     * of streaming; pass `continuous = true` for an unbounded query.
     *
-    * `bucketedMediaBuckets = Some(n)` (round 5) stages the static
-    * media sidecar ONCE as an n-bucket table
-    * ([[Commit.stageMediaBucketed]], fingerprint-guarded — resumed
-    * runs pay nothing) and routes every micro-batch through the
-    * NO-BROADCAST join (ExtractionPipeline.extractVsBucketedMedia):
-    * the stream-static join then moves only the batch's bytes-free
-    * task metadata, never payloads, never a broadcast — the 10^12-doc
-    * posture for a streaming deployment. Default keeps `extract`'s
-    * gated broadcast.
+    * Every micro-batch joins the static sidecar through
+    * `ExtractionPipeline.extract`'s size-gated broadcast of the
+    * bytes-free task metadata. `maxFilesPerTrigger` bounds that
+    * metadata side per batch, so lower it if the gate ever logs that
+    * a batch went over the broadcast cap.
     *
     * `dedupGuard = true` (round 6) drops near-duplicate documents ON
     * ARRIVAL, before they pay extraction: each batch doc's 64-bit
@@ -88,7 +84,6 @@ object StreamingExtract {
       partitions: Int = 32,
       continuous: Boolean = false,
       maxFilesPerTrigger: Int = 100,
-      bucketedMediaBuckets: Option[Int] = None,
       dedupGuard: Boolean = false,
       guardMaxHamming: Int = 6,
       guardBandBits: Int = 8): StreamingQuery = {
@@ -107,9 +102,6 @@ object StreamingExtract {
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(docsDir)
     Files.createDirectories(Paths.get(outDir, "_manifest"))
-    // one-time static-side staging, BEFORE the stream starts
-    val mediaTable = bucketedMediaBuckets.map(b =>
-      Commit.stageMediaBucketed(spark, media, outDir, b))
     val q = reader.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
@@ -149,13 +141,7 @@ object StreamingExtract {
                 .select(col("did_a").as("doc_id")).distinct()
               survivors.join(nearDrop, Seq("doc_id"), "left_anti")
             }
-          val out = (mediaTable, bucketedMediaBuckets) match {
-            case (Some(tbl), Some(b)) =>
-              ExtractionPipeline.extractVsBucketedMedia(
-                spark, accepted.drop("_fp"), tbl, b, partitions)
-            case _ =>
-              ExtractionPipeline.extract(accepted.drop("_fp"), media, partitions)
-          }
+          val out = ExtractionPipeline.extract(accepted.drop("_fp"), media, partitions)
           out.write.mode("overwrite").parquet(s"$outDir/data/epoch=$epochId")
           if (dedupGuard)
             accepted.select(col("_fp").as("fp")).distinct()

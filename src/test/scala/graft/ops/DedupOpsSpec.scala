@@ -651,6 +651,21 @@ class DedupOpsSpec extends AnyFunSuite {
       .contains((k, nq3, hits3)))
   }
 
+  test("ivfSampleTag: ids hash length-prefixed, and a NULL id is rejected by name") {
+    // a separator inside an id must not merge two different samples
+    assert(SimilarityOps.ivfSampleTag(Seq("1,2")) !=
+      SimilarityOps.ivfSampleTag(Seq("1", "2")))
+    assert(SimilarityOps.ivfSampleTag(Seq("", "a")) !=
+      SimilarityOps.ivfSampleTag(Seq("a")))
+    // still order-independent: the tag names the id SET
+    assert(SimilarityOps.ivfSampleTag(Seq("b", "a")) ==
+      SimilarityOps.ivfSampleTag(Seq("a", "b")))
+    val e = intercept[IllegalArgumentException] {
+      SimilarityOps.ivfSampleTag(Seq("1", null))
+    }
+    assert(e.getMessage.contains("NULL query id"), e.getMessage)
+  }
+
   test("ivfQuerySQ: scoring pass reads codes not vectors; pack roundtrips; re-rank ≡ full precision") {
     val vrng = new scala.util.Random(37)
     def randVec(): Array[Float] =

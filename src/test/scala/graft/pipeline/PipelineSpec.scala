@@ -79,21 +79,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(Commit.readProgress(outDir).contains(100.0))
   }
 
-  test("chunked commit over the BUCKETED no-broadcast join resumes and matches goldens") {
-    val outDir = Files.createTempDirectory("graft_out_bj").toString
-    intercept[RuntimeException] {
-      Commit.run(spark, docs, media, outDir, "run-bj-1", chunks = 4,
-        partitions = 8, failAfterChunks = 2, bucketedJoin = true)
-    }
-    assert(Commit.committedChunks(outDir).size == 2)
-    val summary = Commit.run(spark, docs, media, outDir, "run-bj-2",
-      chunks = 4, partitions = 8, bucketedJoin = true)
-    assert(summary.skipped.size == 2 && summary.committed.size == 2)
-    val out = Commit.readOutput(spark, outDir)
-    assert(out.count() == golden.count())
-    assert(mismatches(out, golden) == 0L)
-  }
-
   test("span-mismatch counters land in the lineage manifests (north-rule field)") {
     // clean expectation → zero everywhere; a corrupted expectation →
     // exactly the corrupted doc counts as a mismatch, in its chunk
@@ -300,117 +285,11 @@ class PipelineSpec extends AnyFunSuite {
       Seq("m/shared/0#page1", "m/shared/0#page2"))
   }
 
-  test("bucketed staged extract matches the golden spans (no-broadcast path)") {
-    val outDir = Files.createTempDirectory("graft_bucketed").toString
-    val stage = Commit.stageBucketed(spark, docs, media, outDir, buckets = 8)
-    val out = ExtractionPipeline.extractStaged(spark, stage, partitions = 8)
-    assert(out.count() == golden.count())
-    assert(mismatches(out, golden) == 0L)
-    // staging is idempotent: a second call reuses the layout
-    val again = Commit.stageBucketed(spark, docs, media, outDir, buckets = 8)
-    assert(again == stage)
-  }
-
-  test("bucketed staging invalidates PER COMPONENT: inline-only change keeps the payload table") {
-    import spark.implicits._
-    val inDir = Files.createTempDirectory("graft_bucketed_inc_in").toString
-    CorpusGen.write(spark, inDir, CorpusGen.Params(nDocs = 30))
-    def d = spark.read.parquet(s"$inDir/docs")
-    def m = spark.read.parquet(s"$inDir/media")
-    val outDir = Files.createTempDirectory("graft_bucketed_inc").toString
-    val root = java.nio.file.Paths.get(outDir, "_bucketed", "buckets=4")
-    Commit.stageBucketed(spark, d, m, outDir, buckets = 4)
-    def fileState(sub: String): Map[String, java.nio.file.attribute.FileTime] = {
-      import scala.jdk.CollectionConverters._
-      Files.walk(root.resolve(sub)).iterator().asScala
-        .filter(Files.isRegularFile(_))
-        .map(p => root.relativize(p).toString -> Files.getLastModifiedTime(p))
-        .toMap
-    }
-    val media0 = fileState("media"); val tasks0 = fileState("tasks")
-    val inline0 = fileState("inline")
-    // append one INLINE-ONLY doc: no new media refs, no new media spans
-    Seq(graft.model.Doc("zz-inline",
-      Seq(graft.model.Span("text", "appended inline", "", 0))))
-      .toDF().write.mode("append").parquet(s"$inDir/docs")
-    val stage = Commit.stageBucketed(spark, d, m, outDir, buckets = 4)
-    // payload table AND media-task table untouched; inline rewritten
-    assert(fileState("media") == media0,
-      "an inline-only change rewrote the bucketed payload table")
-    assert(fileState("tasks") == tasks0,
-      "an inline-only change rewrote the media-task table")
-    assert(fileState("inline") != inline0, "inline component not restaged")
-    // and the staged view is complete: extractStaged sees the new doc
-    val out = ExtractionPipeline.extractStaged(spark, stage, partitions = 8)
-    assert(out.filter(col("doc_id") === "zz-inline").count() == 1L)
-    assert(out.count() == d.count())
-    // catalog loss (a fresh session's in-memory catalog is empty): the
-    // staged FILES are intact, so staging must RE-REGISTER the tables
-    // over them — never rewrite 100 TB because a session restarted
-    val media1 = fileState("media"); val tasks1 = fileState("tasks")
-    spark.sql(s"DROP TABLE ${stage.tasksTable}")
-    spark.sql(s"DROP TABLE ${stage.mediaTable}")
-    val stage2 = Commit.stageBucketed(spark, d, m, outDir, buckets = 4)
-    assert(fileState("media") == media1 && fileState("tasks") == tasks1,
-      "catalog loss triggered a data rewrite")
-    val out2 = ExtractionPipeline.extractStaged(spark, stage2, partitions = 8)
-    assert(out2.count() == d.count())
-    // the re-registered tables still join exchange-free
-    val p = {
-      val buf = new java.io.ByteArrayOutputStream()
-      Console.withOut(buf) {
-        ExtractionPipeline.extractStaged(spark, stage2, 8).explain("formatted")
-      }
-      buf.toString
-    }
-    assert(!p.contains("BroadcastExchange"), p.take(3000))
-  }
-
-  test("bucketed staged extract: missing payload and empty docs keep extract()'s semantics") {
-    import spark.implicits._
-    val weird = Seq(
-      graft.model.Doc("bw-null-ref", Seq(graft.model.Span("text", "hello", null, 0))),
-      graft.model.Doc("bw-empty", Nil),
-      graft.model.Doc("bw-missing-media", Seq(graft.model.Span("pdf", "", "m/nope/0", 0))))
-    val outDir = Files.createTempDirectory("graft_bucketed_w").toString
-    val stage = Commit.stageBucketed(spark,
-      spark.createDataset(weird).toDF(),
-      spark.emptyDataset[graft.model.MediaBlob].toDF(), outDir, buckets = 4)
-    val out = ExtractionPipeline.extractStaged(spark, stage, partitions = 2)
-    assert(out.count() == 3)
-    val byId = out.collect().map(r => r.getString(0) ->
-      r.getSeq[org.apache.spark.sql.Row](1)).toMap
-    assert(byId("bw-null-ref").map(s => (s.getString(0), s.getString(1))) ==
-      Seq(("text", "hello")))
-    assert(byId("bw-empty").isEmpty)
-    assert(byId("bw-missing-media").map(_.getString(0)) == Seq("error"))
-  }
-
-  test("batch-vs-bucketed-media join (streaming shape) keeps extract()'s weird-input semantics") {
-    import spark.implicits._
-    val weird = Seq(
-      graft.model.Doc("sw-null-ref", Seq(graft.model.Span("text", "hello", null, 0))),
-      graft.model.Doc("sw-empty", Nil),
-      graft.model.Doc("sw-missing-media", Seq(graft.model.Span("pdf", "", "m/nope/0", 0))))
-    val outDir = Files.createTempDirectory("graft_smedia_w").toString
-    val tbl = Commit.stageMediaBucketed(spark,
-      spark.emptyDataset[graft.model.MediaBlob].toDF(), outDir, buckets = 4)
-    val out = ExtractionPipeline.extractVsBucketedMedia(spark,
-      spark.createDataset(weird).toDF(), tbl, buckets = 4, partitions = 2)
-    assert(out.count() == 3)
-    val byId = out.collect().map(r => r.getString(0) ->
-      r.getSeq[org.apache.spark.sql.Row](1)).toMap
-    assert(byId("sw-null-ref").map(s => (s.getString(0), s.getString(1))) ==
-      Seq(("text", "hello")))
-    assert(byId("sw-empty").isEmpty)
-    assert(byId("sw-missing-media").map(_.getString(0)) == Seq("error"))
-  }
-
-  test("extract and extractStaged agree exactly on a randomized adversarial corpus") {
+  test("extract equals a plain-Scala kernel reference on an adversarial corpus") {
     // seeded random docs mixing every edge shape at once: null/empty
     // text, null/aliased/missing media_refs, unknown kinds, empty
-    // docs, shared payloads — the two execution paths (gated-broadcast
-    // vs co-bucketed) must be row-for-row identical on all of it.
+    // docs, shared payloads — extract must be row-for-row identical to
+    // the same tasks run through SpanKernel.process in plain Scala.
     import spark.implicits._
     val rng = new scala.util.Random(1234)
     val kinds = Seq("text", "html", "pdf", "png", "jpeg", "zip", "weird")
@@ -435,14 +314,36 @@ class PipelineSpec extends AnyFunSuite {
       }
       graft.model.Doc(s"rand-$d", spans)
     }
-    val docsDf = spark.createDataset(docs).toDF()
-    val mediaDf = spark.createDataset(media).toDF()
-    val a = ExtractionPipeline.extract(docsDf, mediaDf, partitions = 4)
-    val outDir = Files.createTempDirectory("graft_rand_bucketed").toString
-    val stage = Commit.stageBucketed(spark, docsDf, mediaDf, outDir, buckets = 4)
-    val b = ExtractionPipeline.extractStaged(spark, stage, partitions = 4)
-    assert(a.count() == 80 && b.count() == 80)
-    assert(mismatches(a, b) == 0L)
+    val out = ExtractionPipeline.extract(
+      spark.createDataset(docs).toDF(), spark.createDataset(media).toDF(),
+      partitions = 4)
+    // the reference: tasks built as spanTasks builds them (NULL text or
+    // ref → "", an empty doc → one EmptyDocKind task), bytes only for a
+    // media kind whose ref is found, then the kernel and reassemble
+    val blobs = media.map(m => m.media_ref -> m.bytes).toMap
+    def orEmpty(s: String) = Option(s).getOrElse("")
+    val expected = docs.map { d =>
+      val tasks =
+        if (d.spans.isEmpty)
+          Seq(graft.model.SpanTask(d.doc_id, 0, SpanKernel.EmptyDocKind, "", "", null))
+        else d.spans.map { sp =>
+          val ref = orEmpty(sp.media_ref)
+          val bytes =
+            if (SpanKernel.MediaKinds.contains(sp.kind)) blobs.getOrElse(ref, null)
+            else null
+          graft.model.SpanTask(d.doc_id, sp.offset, sp.kind, orEmpty(sp.text), ref, bytes)
+        }
+      val spans = tasks.flatMap(SpanKernel.process(_))
+        .sortBy(s => (s.offset, s.sub, s.kind, s.text, s.media_ref))
+        .filter(_.kind != SpanKernel.EmptyDocKind)
+        .zipWithIndex.map { case (s, i) => (s.kind, s.text, s.media_ref, i) }
+      d.doc_id -> spans
+    }.toMap
+    val actual = out.collect().map(r => r.getString(0) ->
+      r.getSeq[org.apache.spark.sql.Row](1).map(s =>
+        (s.getString(0), s.getString(1), s.getString(2), s.getInt(3)))).toMap
+    assert(actual.size == 80)
+    assert(actual == expected)
   }
 
   test("inline span keeps its text when its media_ref aliases a payload row") {

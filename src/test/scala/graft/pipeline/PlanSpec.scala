@@ -73,59 +73,6 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
-  test("bucketed staged extract: media join has NO broadcast and NO exchange at all") {
-    // The 10^12-doc regime: the broadcast in extract() cannot hold the
-    // metadata side, so extractStaged joins the co-bucketed layout.
-    // The plan must contain zero BroadcastExchange (nothing to outgrow
-    // -> no driver OOM path) and, as everywhere, no Exchange carrying
-    // payload bytes — the join itself must be a co-located zip.
-    val outDir = Files.createTempDirectory("graft_bucketed_plan").toString
-    val docs = spark.read.parquet(s"$dir/docs")
-    val media = spark.read.parquet(s"$dir/media")
-    val stage = Commit.stageBucketed(spark, docs, media, outDir, buckets = 4)
-    val p = plan(ExtractionPipeline.extractStaged(spark, stage, 8))
-    assert(!p.contains("BroadcastExchange") && !p.contains("BroadcastHashJoin"),
-      s"staged extract must not depend on any broadcast:\n${p.take(4000)}")
-    assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"),
-      p.take(3000))
-    val blocks = p.split("\\(\\d+\\) ").toSeq
-    val exchanges = blocks.filter(_.startsWith("Exchange"))
-    // the ONLY exchanges are the inline salt and the reassembly
-    // groupBy — text movers; neither may carry bytes, and the join
-    // sides must contribute none
-    exchanges.foreach { b =>
-      val input = b.linesIterator.find(_.startsWith("Input")).getOrElse("")
-      assert(!input.contains("bytes#"),
-        s"an Exchange carries payload bytes:\n$b")
-    }
-    // bucketed scan feeds the join directly: no exchange between the
-    // parquet scans of the staged tables and the join node
-    val joinIdx = p.indexOf("SortMergeJoin")
-    assert(joinIdx >= 0 || p.contains("ShuffledHashJoin"))
-  }
-
-  test("batch-vs-bucketed-media join (streaming shape): no broadcast, no payload exchange") {
-    // The micro-batch task metadata repartitions to the media table's
-    // bucket layout; the payload side must feed the join straight from
-    // its bucketed scan — zero BroadcastExchange anywhere, and the only
-    // exchanges move bytes-free metadata/text.
-    val outDir = Files.createTempDirectory("graft_smedia_plan").toString
-    val docs = spark.read.parquet(s"$dir/docs")
-    val media = spark.read.parquet(s"$dir/media")
-    val tbl = Commit.stageMediaBucketed(spark, media, outDir, buckets = 4)
-    val p = plan(ExtractionPipeline.extractVsBucketedMedia(
-      spark, docs, tbl, buckets = 4, partitions = 8))
-    assert(!p.contains("BroadcastExchange") && !p.contains("BroadcastHashJoin"),
-      s"streaming-shape join must not depend on any broadcast:\n${p.take(4000)}")
-    assert(p.contains("ShuffledHashJoin"), p.take(3000))
-    val blocks = p.split("\\(\\d+\\) ").toSeq
-    blocks.filter(_.startsWith("Exchange")).foreach { b =>
-      val input = b.linesIterator.find(_.startsWith("Input")).getOrElse("")
-      assert(!input.contains("bytes#"),
-        s"an Exchange carries payload bytes:\n$b")
-    }
-  }
-
   test("invoice chain: exactly one round-robin exchange after reassembly") {
     // The typed date-cascade map is CPU-bound with high per-row
     // variance; one deliberate round-robin spread earns its shuffle

@@ -157,32 +157,4 @@ class StreamingExtractSpec extends AnyFunSuite {
     assert(after3 == after2 ++ Set("w3-a", "w3-new"), after3.toString)
     assert(StreamingExtract.readCommittedHashes(spark, outDir).count() == 7L)
   }
-
-  test("streaming over the BUCKETED no-broadcast media join matches goldens across restart") {
-    val corpus = Files.createTempDirectory("graft_streamb_corpus").toString
-    CorpusGen.write(spark, corpus,
-      CorpusGen.Params(nDocs = 100, kinds = Seq("text", "html", "pdf", "png")))
-    val media = spark.read.parquet(s"$corpus/media")
-    val golden = spark.read.parquet(s"$corpus/golden_spans")
-    val streamDir = Files.createTempDirectory("graft_streamb_in").toString
-    val outDir = Files.createTempDirectory("graft_streamb_out").toString
-    val ckpt = Files.createTempDirectory("graft_streamb_ckpt").toString
-    val parts = new java.io.File(s"$corpus/docs").listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    val (wave1, wave2) = parts.splitAt(parts.length / 2)
-    wave1.foreach(f => Files.copy(f.toPath, Paths.get(streamDir, f.getName)))
-    StreamingExtract.run(spark, streamDir, media, outDir, ckpt,
-      partitions = 4, bucketedMediaBuckets = Some(4)).awaitTermination()
-    wave2.foreach(f => Files.copy(f.toPath, Paths.get(streamDir, f.getName)))
-    StreamingExtract.run(spark, streamDir, media, outDir, ckpt,
-      partitions = 4, bucketedMediaBuckets = Some(4)).awaitTermination()
-    val out = StreamingExtract.readOutput(spark, outDir)
-      .select(col("doc_id"), col("spans"))
-    assert(out.count() == golden.count(), "every doc exactly once")
-    val mm = out.select(col("doc_id"), col("spans").as("a"))
-      .join(golden.select(col("doc_id"), col("spans").as("b")),
-        Seq("doc_id"), "full_outer")
-      .where(not(col("a") <=> col("b"))).count()
-    assert(mm == 0L)
-  }
 }
